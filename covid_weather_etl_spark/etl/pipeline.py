@@ -28,19 +28,34 @@ Scale design: files are the unit of validation, so the file-level
 verdict is one groupBy on the lineage column (`input_file_name()`), not
 a driver loop; gold appends are anti-joins on the natural key — at
 100 TB gold would be partitioned by date so the anti-join prunes to the
-incoming date range.
+incoming date range. One batch does each piece of work once:
+- one listing: a `dir/<pattern>` glob is read as the directory plus
+  `pathGlobFilter`, so Spark lists one path in-process instead of
+  scheduling a distributed listing job over every matched file;
+- one JSON parse: the validated entries and the per-file verdict are
+  cached for the batch; every write, the batch counts (one aggregate
+  collect over the verdict) and the gold load read them, and the load
+  takes the in-memory silver frame instead of re-reading the zone;
+- JVM-only local relations: the country lookup is a literal map and
+  the log and cursor rows are `spark.range(1)` projections, because a
+  `spark.createDataFrame(list)` frame is backed by a Python RDD and
+  every action on it runs Python-worker tasks.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import glob
 import os
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid_weather_etl_spark import schemas as S
+from covid_weather_etl_spark.operators.dedup import dedup_on_load
 
 
 @dataclass(frozen=True)
@@ -57,6 +72,30 @@ def _entry_schema(kind: str) -> T.StructType:
     return S.RAW_WEATHER_SCHEMA if kind == "weather" else S.RAW_COVID_SCHEMA
 
 
+def _is_glob(part: str) -> bool:
+    return any(c in part for c in "*?[")
+
+
+def _read_path(staging_glob: str) -> tuple[str, dict[str, str]]:
+    """(path, reader options) that read the files `staging_glob` matches.
+
+    A glob that matches more paths than Spark's parallel-discovery
+    threshold (32) makes every read schedule a listing job with one
+    task per path. When only the last path component has wildcards and
+    every match is a file, the parent directory with `pathGlobFilter`
+    reads the same files (hidden `_`/`.` names are skipped either way)
+    and is listed once, in-process. A matched subdirectory would be
+    read by the glob but not by the filter, so that case keeps the glob.
+    """
+    parent, pattern = os.path.split(staging_glob)
+    if _is_glob(parent) or not _is_glob(pattern):
+        return staging_glob, {}
+    matches = glob.glob(staging_glob.removeprefix("file:"))
+    if not matches or not all(os.path.isfile(m) for m in matches):
+        return staging_glob, {}
+    return parent, {"pathGlobFilter": pattern}
+
+
 def read_staging(spark: SparkSession, staging_glob: str, kind: str) -> DataFrame:
     """Parse staged raw JSON (bronze) into one row per entry.
 
@@ -68,10 +107,11 @@ def read_staging(spark: SparkSession, staging_glob: str, kind: str) -> DataFrame
     replaces the reference's import_logs bookkeeping.
     """
     schema = _entry_schema(kind)
+    path, options = _read_path(staging_glob)
     # multiLine: the reference writes indent=2 pretty JSON, one envelope
     # per file (etl/extractor.py:94-95) — not JSON-lines.
     raw = (spark.read.schema(S.ENVELOPE_SCHEMA)
-           .option("multiLine", "true").json(staging_glob)
+           .option("multiLine", "true").options(**options).json(path)
            .withColumn("src_file",
                        F.element_at(F.split(F.input_file_name(), "/"), -1)))
     entry_str = F.col("entry_str")
@@ -102,14 +142,14 @@ def _invalid_entry(kind: str) -> F.Column:
     return bad
 
 
-def transform(spark: SparkSession, bronze: DataFrame, kind: str,
-              batch_ts: int) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Validate + clean bronze entries → (silver, quarantine, transform_log).
+def validate(bronze: DataFrame, kind: str) -> tuple[DataFrame, DataFrame]:
+    """Flag bad entries and judge each file → (entries, verdict).
 
-    File-granular routing: ONE bad entry sends the whole file to
-    quarantine (reference `etl/transformer.py:40,57-60`) — expressed as
-    a groupBy on the lineage column, then a broadcast join of the
-    verdict back onto the entries. No driver loop, no second read.
+    `entries` is bronze plus the `_bad` flag; `verdict` has one row per
+    file: its entry count, bad-entry count and status. File-granular
+    routing: ONE bad entry makes the whole file an Error (reference
+    `etl/transformer.py:40,57-60`), expressed as a groupBy on the
+    lineage column — no per-file loop.
     """
     entries = bronze.withColumn("_bad", _invalid_entry(kind))
     verdict = (entries.groupBy("src_file")
@@ -118,39 +158,49 @@ def transform(spark: SparkSession, bronze: DataFrame, kind: str,
                .withColumn("status",
                            F.when(F.col("n_bad_entries") > 0, "Error")
                             .otherwise("Processed")))
+    return entries, verdict
+
+
+def _country(code: F.Column) -> F.Column:
+    """Country name from the reference's dimension (`data/countries.py`),
+    or the code itself when it has none."""
+    names = F.create_map(*[F.lit(v) for _, c, n in S.COUNTRIES for v in (c, n)])
+    return F.coalesce(names[code], code)
+
+
+def transform(entries: DataFrame, verdict: DataFrame, kind: str,
+              batch_ts: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Route and clean validated entries → (silver, quarantine, transform_log).
+
+    The verdict is broadcast-joined back onto the entries: a file's
+    entries all go to silver or all to quarantine.
+    """
     routed = entries.join(F.broadcast(verdict.select("src_file", "status")),
                           "src_file")
     quarantine = routed.filter(F.col("status") == "Error").drop("status", "_bad")
     good = routed.filter(F.col("status") == "Processed").drop("status", "_bad")
-
-    countries = spark.createDataFrame(S.COUNTRIES, schema=S.COUNTRY_SCHEMA)
-    code_to_name = F.broadcast(countries.select(
-        F.col("code").alias("country_code"), F.col("name").alias("country")))
 
     if kind == "weather":
         silver = (
             good
             # snow/tsun null → 0.0 (reference etl/transformer.py:46-51)
             .fillna(0.0, subset=list(S.WEATHER_IMPUTED))
-            .join(code_to_name, "country_code", "left")
             .select(
                 F.to_timestamp("date").alias("date"),
                 *[F.col(f).cast("float").alias(f) for f in S.WEATHER_FIELDS],
-                F.coalesce("country", "country_code").alias("country"),
+                _country(F.col("country_code")).alias("country"),
                 "src_file",
                 F.lit(batch_ts).cast("long").alias("batch_ts"))
         )
     else:
         silver = (
             good
-            # drop last_update/region (reference etl/transformer.py:42-43)
-            .drop("last_update", "region")
-            .join(code_to_name, "country_code", "left")
+            # last_update/region are dropped (reference etl/transformer.py:42-43)
             .select(
                 F.to_date("date").alias("date"),
                 *[F.col(f).cast("int").alias(f) for f in S.COVID_INT_FIELDS],
                 F.col("fatality_rate").cast("float").alias("fatality_rate"),
-                F.coalesce("country", "country_code").alias("country"),
+                _country(F.col("country_code")).alias("country"),
                 "src_file",
                 F.lit(batch_ts).cast("long").alias("batch_ts"))
         )
@@ -161,27 +211,51 @@ def transform(spark: SparkSession, bronze: DataFrame, kind: str,
     return silver, quarantine, tlog
 
 
-def load(spark: SparkSession, silver: DataFrame, gold_path: str, kind: str,
-         batch_ts: int) -> DataFrame:
-    """Anti-join dedup append into gold → load_log.
+def _read_or_none(spark: SparkSession, schema: T.StructType,
+                  path: str) -> DataFrame | None:
+    """The parquet table at `path`, or None when the path does not exist.
+
+    Any other failure (corrupt footer, IO error) raises: treating a
+    broken table as absent would restart gold ids and append duplicates,
+    or rewind the cursor.
+    """
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as exc:
+        if (exc.getCondition() or "") != "PATH_NOT_FOUND":
+            raise
+        return None
+
+
+def _nullable(c: F.Column, always: F.Column) -> F.Column:
+    """`c`, flagged nullable in the written parquet schema.
+
+    `always` must hold on every row. Being a condition on a row value,
+    Catalyst cannot fold it away; a literal condition would be folded
+    and the column written NOT NULL.
+    """
+    return F.when(always, c)
+
+
+def load(spark: SparkSession, silver: DataFrame, gold_path: str,
+         kind: str) -> int:
+    """Anti-join dedup append of one batch's silver rows into gold.
 
     Replaces the reference's per-row existence probe
     (`database/operations.py:175-206`) with: in-batch dropDuplicates on
     the natural key, then one left-anti join against gold, then a bulk
     columnar append. Surrogate ids continue from max(gold.id) via
-    row_number — the set-based get_or_create.
+    row_number — the set-based get_or_create. Returns the number of
+    rows appended.
     """
     key = S.WEATHER_NATURAL_KEY if kind == "weather" else S.COVID_NATURAL_KEY
-    try:
-        existing = spark.read.parquet(gold_path)
+    schema = S.WEATHER_SCHEMA if kind == "weather" else S.COVID_SCHEMA
+    existing = _read_or_none(spark, schema, gold_path)
+    if existing is None:
+        max_id, batch = 0, silver.dropDuplicates(key)
+    else:
         max_id = existing.agg(F.max("id")).collect()[0][0] or 0
-    except Exception:
-        existing, max_id = None, 0
-
-    batch = silver.dropDuplicates(key)
-    if existing is not None:
-        batch = batch.join(existing.select(*key).dropDuplicates(key),
-                           on=key, how="left_anti")
+        batch = dedup_on_load(silver, existing, key)
     # Dense unique ids WITHOUT a global window (a bare
     # W.orderBy(...) row_number funnels the whole batch through one
     # task — fatal at 100 TB appends). Two-phase, like
@@ -200,13 +274,14 @@ def load(spark: SparkSession, silver: DataFrame, gold_path: str, kind: str,
                .withColumn("_off", F.coalesce(
                    F.sum("_cnt").over(w_off), F.lit(0)).cast("long"))
                .select("_pid", "_off"))
+    # Every gold column but id is written nullable, the schema every gold
+    # file carries; silver's imputed snow/tsun are NOT NULL.
     to_append = (local
                  .join(F.broadcast(offsets), "_pid")
                  .withColumn("id", (F.col("_rn") + F.col("_off")
                                     + F.lit(max_id)).cast("long"))
-                 .select("id", *[f.name for f in
-                                 (S.WEATHER_SCHEMA if kind == "weather"
-                                  else S.COVID_SCHEMA).fields if f.name != "id"]))
+                 .select("id", *[_nullable(F.col(f.name), F.col("_rn") > 0).alias(f.name)
+                                 for f in schema.fields if f.name != "id"]))
     # Unpartitioned at test scale so an all-quarantined batch still
     # leaves a readable (empty) gold footer; the at-scale layout adds
     # .partitionBy("country") — the reference's dominant filter (P4) —
@@ -219,11 +294,21 @@ def load(spark: SparkSession, silver: DataFrame, gold_path: str, kind: str,
     n_loaded = to_append.count()
     to_append.write.mode("append").parquet(gold_path)
     to_append.unpersist()
+    return n_loaded
 
-    n_in = silver.count()
-    return spark.createDataFrame(
-        [(batch_ts, f"{kind}_batch", "Success", n_loaded, n_in - n_loaded)],
-        schema=S.LOAD_LOG_SCHEMA)
+
+def _one_row(spark: SparkSession, schema: T.StructType, *values) -> DataFrame:
+    """One row of `values`, typed and null-flagged as `schema` says.
+
+    A projection of `spark.range`, planned in the JVM alone: a
+    `spark.createDataFrame([...])` frame is backed by a Python RDD, so
+    every action on it runs Python-worker tasks.
+    """
+    def column(field: T.StructField, value) -> F.Column:
+        c = F.lit(value).cast(field.dataType)
+        return (_nullable(c, F.col("id") == 0) if field.nullable else c).alias(field.name)
+    return spark.range(0, 1, 1, 1).select(
+        *[column(f, v) for f, v in zip(schema.fields, values)])
 
 
 @dataclass
@@ -241,42 +326,47 @@ class BatchResult:
 def run_batch(spark: SparkSession, staging_glob: str, lake: Lake, kind: str,
               batch_ts: int) -> BatchResult:
     """One end-to-end batch: bronze → silver/quarantine → gold + logs."""
-    import glob as _glob
-    if not _glob.glob(staging_glob.removeprefix("file:")):
+    if not glob.glob(staging_glob.removeprefix("file:")):
         # empty work-list: the reference logs and exits cleanly
         # (tests/test_transformer.py:185-192)
         return BatchResult(kind=kind, batch_ts=batch_ts, n_files=0,
                            n_error_files=0, error_rate_pct=0.0,
                            high_error_alert=False, n_loaded=0,
                            n_skipped_duplicates=0)
-    bronze = read_staging(spark, staging_glob, kind)
-    silver, quarantine, tlog = transform(spark, bronze, kind, batch_ts)
-
-    silver.write.mode("append").parquet(lake.path("silver", kind))
-    if quarantine.take(1):
-        quarantine.write.mode("append").parquet(lake.path("quarantine", kind))
-    tlog.write.mode("append").parquet(lake.path("logs", "transform"))
-
-    # filter the silver zone to THIS batch's rows by the batch_ts lineage
-    # column — file names repeat across backfill re-runs (reference D4).
-    llog = load(spark, spark.read.parquet(lake.path("silver", kind))
-                .filter(F.col("batch_ts") == batch_ts),
-                lake.path("gold", kind), kind, batch_ts)
-    llog.write.mode("append").parquet(lake.path("logs", "load"))
-
-    stats = tlog.agg(
-        F.count("*").alias("n_files"),
-        F.sum(F.when(F.col("status") == "Error", 1).otherwise(0)).alias("n_err"),
-    ).collect()[0]
-    n_files, n_err = stats["n_files"], stats["n_err"] or 0
+    entries, verdict = validate(read_staging(spark, staging_glob, kind), kind)
+    # The staged JSON is parsed once: every job below reads these caches.
+    # A cached plan keeps its shuffle partitioning, which AQE would have
+    # coalesced; the verdict (one row per file) is one partition, so the
+    # transform log still gets one file per batch.
+    entries, verdict = entries.cache(), verdict.coalesce(1).cache()
+    try:
+        stats = verdict.agg(
+            F.count("*").alias("n_files"),
+            F.count(F.when(F.col("status") == "Error", 1)).alias("n_err"),
+            F.sum(F.when(F.col("status") == "Processed", F.col("n_entries"))
+                  .otherwise(0)).alias("n_in"),
+        ).collect()[0]
+        silver, quarantine, tlog = transform(entries, verdict, kind, batch_ts)
+        silver.write.mode("append").parquet(lake.path("silver", kind))
+        if stats["n_err"]:
+            quarantine.write.mode("append").parquet(lake.path("quarantine", kind))
+        tlog.write.mode("append").parquet(lake.path("logs", "transform"))
+        n_loaded = load(spark, silver, lake.path("gold", kind), kind)
+    finally:
+        verdict.unpersist()
+        entries.unpersist()
+    n_files, n_err = stats["n_files"], stats["n_err"]
+    n_skipped = (stats["n_in"] or 0) - n_loaded
+    (_one_row(spark, S.LOAD_LOG_SCHEMA, batch_ts, f"{kind}_batch", "Success",
+              n_loaded, n_skipped)
+     .write.mode("append").parquet(lake.path("logs", "load")))
     rate = 100.0 * n_err / n_files if n_files else 0.0
-    lrow = llog.collect()[0]
     return BatchResult(
         kind=kind, batch_ts=batch_ts, n_files=n_files, n_error_files=n_err,
         error_rate_pct=round(rate, 2),
         high_error_alert=rate >= 50.0,
-        n_loaded=lrow["n_inserted"],
-        n_skipped_duplicates=lrow["n_skipped_duplicates"])
+        n_loaded=n_loaded,
+        n_skipped_duplicates=n_skipped)
 
 
 # ---------------------------------------------------------------------------
@@ -289,27 +379,21 @@ CURSOR_DEFAULT = "2021-04-01"
 WINDOW_DAYS = 30
 
 
+def _add_days(day: str, n: int) -> str:
+    return (dt.date.fromisoformat(day) + dt.timedelta(days=n)).isoformat()
+
+
 def get_window(spark: SparkSession, lake: Lake) -> tuple[str, str]:
     """Current [start, end] backfill window (end = start + 29 days)."""
-    path = lake.path("state", "cursor")
-    try:
-        start = spark.read.parquet(path).collect()[0]["start_date"]
-    except Exception:
-        start = CURSOR_DEFAULT
-    end = (spark.range(1)
-           .select(F.date_add(F.lit(start).cast("date"),
-                              WINDOW_DAYS - 1).cast("string"))
-           .collect()[0][0])
-    return start, end
+    cursor = _read_or_none(spark, S.CURSOR_SCHEMA, lake.path("state", "cursor"))
+    start = CURSOR_DEFAULT if cursor is None else cursor.collect()[0]["start_date"]
+    return start, _add_days(start, WINDOW_DAYS - 1)
 
 
 def advance_cursor(spark: SparkSession, lake: Lake) -> str:
     """Advance the cursor past the current window (reference
     set_start_date after load, `dags/etl_dag.py:44-46,84`)."""
-    start, end = get_window(spark, lake)
-    new_start = (spark.range(1)
-                 .select(F.date_add(F.lit(end).cast("date"), 1).cast("string"))
-                 .collect()[0][0])
-    (spark.createDataFrame([(new_start,)], "start_date string")
+    new_start = _add_days(get_window(spark, lake)[1], 1)
+    (_one_row(spark, S.CURSOR_SCHEMA, new_start)
      .write.mode("overwrite").parquet(lake.path("state", "cursor")))
     return new_start

@@ -85,13 +85,8 @@ COVID_NATURAL_KEY = ["date", "country", "confirmed", "deaths", "recovered"]
 # Lineage / metadata tables — database/schema.py:9-65, as append-only logs
 # ---------------------------------------------------------------------------
 
-COUNTRY_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType(), False),
-    T.StructField("code", T.StringType(), False),
-    T.StructField("name", T.StringType(), False),
-])
-
-#: the reference's 3-country dimension (data/countries.py:1-5)
+#: the reference's 3-country dimension (data/countries.py:1-5), as
+#: (id, code, name)
 COUNTRIES = [(1, "MDA", "Moldova"), (2, "DEU", "Germany"), (3, "ITA", "Italy")]
 
 IMPORT_LOG_SCHEMA = T.StructType([
@@ -117,4 +112,10 @@ LOAD_LOG_SCHEMA = T.StructType([
     T.StructField("status", T.StringType(), False),   # Success | Error
     T.StructField("n_inserted", T.LongType(), False),
     T.StructField("n_skipped_duplicates", T.LongType(), False),
+])
+
+#: incremental backfill cursor, one row (reference Airflow Variable,
+#: dags/etl_dag.py:31-46)
+CURSOR_SCHEMA = T.StructType([
+    T.StructField("start_date", T.StringType(), True),
 ])
