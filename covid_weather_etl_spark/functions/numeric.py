@@ -23,6 +23,8 @@ aggregation stays map-side combinable (partial sums are exact too).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -110,6 +112,16 @@ def det_val(M: list[list[float]]) -> float:
             term = term * M[i][perm[i]]
         acc = acc + term if sign > 0 else acc - term
     return acc
+
+
+def half_up(x: float, places: int) -> Decimal:
+    """Spark ROUND(x, places) of a double, replayed exactly: Spark
+    rounds the double's shortest decimal representation
+    (Double.toString, which is Python's repr) HALF_UP. Returned as an
+    exact Decimal — the value a following CAST(... AS DECIMAL) holds;
+    float() of it is the DOUBLE result of ROUND."""
+    return Decimal(repr(x)).quantize(Decimal(1).scaleb(-places),
+                                     ROUND_HALF_UP)
 
 
 def det_sql(M: list[list[str]]) -> str:

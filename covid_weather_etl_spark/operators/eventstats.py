@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import gate
+from covid_weather_etl_spark.functions.numeric import half_up
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -392,8 +394,7 @@ def user_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: driver-resolution cap on the day-grain risk table (rows). The table
 #: is horizon-bounded (one row per observed duration day), so the cap
-#: never binds on real data at any corpus scale; -1 forces the
-#: distributed triangular-join path (tests).
+#: never binds on real data at any corpus scale.
 SURV_COLLECT_MAX = 100_000
 
 
@@ -417,14 +418,11 @@ def _km_from_day_tab(spark: SparkSession, rows) -> DataFrame:
     triangular broadcast joins + their checkpoint/broadcast-build jobs
     with one ascending-day prefix pass. Bit-exactness: counts are
     integers; each log term replays F.log == StrictMath.log via py4j
-    on the identical double d·1.0/n, snapped 9dp with the
-    Decimal(repr(x)) HALF_UP replay of Spark ROUND, DECIMAL-summed
-    exactly; survival replays ROUND(EXP(logsum), 6) with StrictMath.exp
-    + the same Decimal snap. Pinned driver-vs-distributed bitwise in
-    tests/test_eventstats.py."""
-    from decimal import ROUND_HALF_UP, Decimal
+    on the identical double d·1.0/n, snapped 9dp with the half_up
+    replay of Spark ROUND, DECIMAL-summed exactly; survival replays
+    ROUND(EXP(logsum), 6) with StrictMath.exp + the same snap."""
+    from decimal import Decimal
 
-    q9, q6 = Decimal("1e-9"), Decimal("1e-6")
     jm = spark._jvm.java.lang.StrictMath
     out = []
     logsum, hit = Decimal(0), False
@@ -432,11 +430,8 @@ def _km_from_day_tab(spark: SparkSession, rows) -> DataFrame:
         if d >= n:
             hit = True
         elif d > 0:
-            logsum += Decimal(repr(jm.log(1.0 - d * 1.0 / n))).quantize(
-                q9, ROUND_HALF_UP)
-        surv = 0.0 if hit else float(
-            Decimal(repr(jm.exp(float(logsum)))).quantize(
-                q6, ROUND_HALF_UP))
+            logsum += half_up(jm.log(1.0 - d * 1.0 / n), 9)
+        surv = 0.0 if hit else float(half_up(jm.exp(float(logsum)), 6))
         out.append((day, n, d, c, surv))
     return spark.createDataFrame(
         out, "day bigint, n_at_risk bigint, n_events bigint, "
@@ -447,19 +442,17 @@ def _na_from_day_tab(spark: SparkSession, rows) -> DataFrame:
     """nelson_aalen_hazard's post-day_tab algebra resolved on the
     driver (same gate/discipline as _km_from_day_tab; no
     transcendentals at all — each hazard term is one IEEE divide
-    snapped 9dp via the Decimal(repr) replay of Spark ROUND,
+    snapped 9dp via the half_up replay of Spark ROUND,
     DECIMAL-summed, finals g6-floored like the engine's fround)."""
     import math
-    from decimal import ROUND_HALF_UP, Decimal
+    from decimal import Decimal
 
-    q9 = Decimal("1e-9")
     g6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-    r9 = lambda x: Decimal(repr(x)).quantize(q9, ROUND_HALF_UP)  # noqa: E731
     out = []
     h, v = Decimal(0), Decimal(0)
     for day, d, c, n in _surv_at_risk(rows):
-        h += r9(d * 1.0 / n)
-        v += r9(d * 1.0 / (n * 1.0 * n))
+        h += half_up(d * 1.0 / n, 9)
+        v += half_up(d * 1.0 / (n * 1.0 * n), 9)
         out.append((day, n, d, c, g6(float(h)), g6(float(v))))
     return spark.createDataFrame(
         out, "day long, n_at_risk long, n_events long, "
@@ -565,12 +558,10 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
                .localCheckpoint(eager=False))  # horizon-sized; reused 3×
     # driver resolution (r13): the risk table is horizon-bounded —
     # resolve at-risk counts + the log-space product on the driver
-    # (see _km_from_day_tab; -1 forces the distributed path, pinned
-    # driver-vs-distributed bitwise in tests).
-    if SURV_COLLECT_MAX >= 0:
-        tab = day_tab.limit(SURV_COLLECT_MAX + 1).collect()
-        if len(tab) <= SURV_COLLECT_MAX:
-            return _km_from_day_tab(spark, tab)
+    # (see _km_from_day_tab).
+    tab = gate.collect_upto(day_tab, SURV_COLLECT_MAX)
+    if tab is not None:
+        return _km_from_day_tab(spark, tab)
     tot = day_tab.agg(F.sum(F.col("d") + F.col("c")).alias("n_total"))
     a, b = day_tab.alias("a"), day_tab.alias("b")
     at_risk = (a.crossJoin(F.broadcast(tot))
@@ -1162,10 +1153,9 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
                .localCheckpoint(eager=False))  # horizon-sized; reused 3x
     # driver resolution (r13): same gate/discipline as
     # kaplan_meier_conversion above (see _na_from_day_tab).
-    if SURV_COLLECT_MAX >= 0:
-        tab = day_tab.limit(SURV_COLLECT_MAX + 1).collect()
-        if len(tab) <= SURV_COLLECT_MAX:
-            return _na_from_day_tab(spark, tab)
+    tab = gate.collect_upto(day_tab, SURV_COLLECT_MAX)
+    if tab is not None:
+        return _na_from_day_tab(spark, tab)
     tot = day_tab.agg(F.sum(F.col("d") + F.col("c")).alias("n_total"))
     a, b = day_tab.alias("a"), day_tab.alias("b")
     at_risk = (a.crossJoin(F.broadcast(tot))
@@ -1238,8 +1228,7 @@ def _bt_single_task(directed: DataFrame) -> DataFrame:
     tot     = float(Σ_i floor(pr_i·1e6 + 0.5))/1e6,
     π_i     = floor(((pr_i·n)/tot)·1e6 + 0.5)/1e6
     — exactly the grid-snap sequence the SQL loop and the DuckDB
-    oracle execute, so the result is hash-identical to both (pinned
-    kernel-vs-loop in tests/test_eventstats.py)."""
+    oracle execute, so the result is hash-identical to both."""
     import math
 
     import pandas as pd
@@ -1426,10 +1415,10 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-task collapse (r12, the graph-kernel precedent): the
     # count gate is one cheap job on the items²-bounded frame (and
     # doubles as the checkpoint materialization); below the cap the
-    # whole 3-round MM fit runs in ONE task — kernel-vs-loop equality
-    # pinned in tests, oracle unchanged (hash-identical by the
-    # bit-exactness contract in _bt_single_task's docstring).
-    if 0 <= directed.count() <= BT_SINGLE_TASK_MAX:
+    # whole 3-round MM fit runs in ONE task — oracle unchanged
+    # (hash-identical by the bit-exactness contract in
+    # _bt_single_task's docstring).
+    if gate.fits(directed.count(), BT_SINGLE_TASK_MAX):
         return _bt_single_task(directed)
     wins = (directed.groupBy(F.col("i").alias("item"))
             .agg(F.sum("w_ij").cast("long").alias("n_wins"),
@@ -1525,12 +1514,6 @@ def _shapley_oracle() -> str:
     """
 
 
-#: driver-resolution flag for the Shapley lattice (the census is
-#: domain-bounded at ≤15 rows, so no size cap is needed; False forces
-#: the distributed path for tests).
-_SHAP_DRIVER = True
-
-
 def _shapley_from_cnt(spark: SparkSession, rows) -> DataFrame:
     """shapley_attribution's coalition-lattice algebra resolved on the
     driver from the collected mask census (≤15 rows BY DOMAIN — masks
@@ -1538,8 +1521,7 @@ def _shapley_from_cnt(spark: SparkSession, rows) -> DataFrame:
     is exact integer arithmetic (order-free); phi replays
     phi24 / 24.0 and share replays FLOOR(phi24·1.0/(24.0·attributable)
     ·1e6 + 0.5)/1e6 — the identical IEEE op sequence the Spark
-    expressions execute. Pinned driver-vs-distributed bitwise in
-    tests/test_eventstats.py."""
+    expressions execute."""
     import math
 
     cnt = {int(r["m"]): int(r["c"]) for r in rows}
@@ -1606,11 +1588,10 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # non-zero masks) — the one collect doubles as the checkpoint
     # materialization; empty census (no conversions) falls through to
     # the distributed lattice, whose NaN/NULL shape is the pinned
-    # degenerate behavior. SHAP_DRIVER=False forces the loop (tests).
-    if _SHAP_DRIVER:
-        tab = cnt.collect()
-        if tab:
-            return _shapley_from_cnt(spark, tab)
+    # degenerate behavior.
+    tab = gate.collect_upto(cnt, (1 << len(SHAPLEY_CHANNELS)) - 1)
+    if tab:
+        return _shapley_from_cnt(spark, tab)
     subsets = spark.range(16).select(F.col("id").alias("s"))
     v = (subsets.join(F.broadcast(cnt),
                       (F.col("m").bitwiseAND(F.col("s")) == F.col("m")),

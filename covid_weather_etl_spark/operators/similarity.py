@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from covid_weather_etl_spark.functions import gate
+from covid_weather_etl_spark.functions.numeric import half_up
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -2401,13 +2403,6 @@ def matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: SQ8 evaluation: candidates kept by the quantized score and the
 #: exact-baseline list depth (recall@SQ8_K).
 SQ8_K = 10
-#: driver-resolution flag for the post-head algebra (both heads are
-#: SQ8_K-bounded by construction). Default FALSE (r13): the driver
-#: path A/B'd as a warm wash but read +0.35 s cold-in-session across
-#: all four close bench passes (1.81 vs the 1.44 baseline min) — the
-#: distributed tail stays the default; the driver path and its bitwise
-#: pin remain for the record.
-_SQ8_DRIVER = False
 
 
 @register(
@@ -2507,8 +2502,8 @@ def sq8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
               .join(F.broadcast(probe), "k")
               .groupBy("vec_id")
               .agg(F.sum(F.col("qv") * F.col("pv")).alias("sq8_score")))
-    topk = scores.orderBy(F.col("sq8_score").desc(), "vec_id") \
-                 .limit(SQ8_K)
+    topk = (scores.orderBy(F.col("sq8_score").desc(), "vec_id")
+            .limit(SQ8_K).localCheckpoint(eager=False))
     emb = _vecs(t["embeddings"])
     pv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("p"))
     exact_top = (emb.crossJoin(F.broadcast(pv))
@@ -2518,36 +2513,6 @@ def sq8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                           "vec_id")
                  .limit(SQ8_K)
                  .select("vec_id"))
-    # driver resolution (r13, the rank_biased_overlap precedent): both
-    # heads are ≤SQ8_K rows BY CONSTRUCTION (TakeOrdered limits) — the
-    # post-head rank/hit/recall algebra is integer arithmetic plus ONE
-    # division (n_hits·1.0/SQ8_K, the identical IEEE op), so it
-    # resolves on the driver from the two collected heads instead of a
-    # triangular broadcast join + hit join + count + crossJoin (each a
-    # broadcast-build job). _SQ8_DRIVER=False forces the distributed
-    # path (tests; pinned bitwise either way).
-    if _SQ8_DRIVER:
-        # ONE tagged-union collect so the two head pipelines stay
-        # concurrent inside a single action (two sequential collects
-        # serialized them — measured +0.35 s)
-        both = (topk.select(F.lit(0).alias("side"), "vec_id", "sq8_score")
-                .unionByName(exact_top.select(
-                    F.lit(1).alias("side"), "vec_id",
-                    F.lit(0).cast("long").alias("sq8_score")))
-                .collect())
-        head = [(int(r["vec_id"]), int(r["sq8_score"]))
-                for r in both if r["side"] == 0]
-        exact_ids = {int(r["vec_id"]) for r in both if r["side"] == 1}
-        n_hits = sum(1 for v, _ in head if v in exact_ids)
-        recall = n_hits * 1.0 / SQ8_K
-        out = [(1 + sum(1 for u, us in head
-                        if us > s or (us == s and u < v)),
-                v, s, v in exact_ids, recall) for v, s in head]
-        out.sort()
-        return spark.createDataFrame(
-            out, "rank int, vec_id long, sq8_score long, "
-                 "in_exact_topk boolean, recall_at_k double")
-    topk = topk.localCheckpoint(eager=False)
     # rank without a global window (the registry pins zero): a
     # broadcast triangular count over the k-row frame, as
     # bpe_merge_step does for its merge ranks
@@ -2919,7 +2884,7 @@ def _cluster_purity_oracle() -> str:
 
 #: driver-resolution cap on the contingency table (rows). k×labels-
 #: bounded by construction (IVF cell count × label vocabulary), so the
-#: cap never binds on real data; -1 forces the distributed path (tests).
+#: cap never binds on real data.
 CPN_COLLECT_MAX = 100_000
 
 
@@ -2931,25 +2896,18 @@ def _cpn_from_cells(spark: SparkSession, cells) -> DataFrame:
     integer counts collect losslessly; every LN is evaluated by the
     JVM's OWN StrictMath.log via py4j (Spark 4's F.log == StrictMath —
     the platform libm differs by 1 ulp on some inputs, the F.pow
-    lesson); 9dp snaps replay Spark ROUND's Double.toString/HALF_UP
-    semantics (Decimal(repr(x))); term sums are exact Decimal; sqrt is
-    IEEE-correctly-rounded everywhere so math.sqrt is safe. JDK
-    assumption (ADVICE r12): Double.toString is shortest-roundtrip on
-    JDK 19+, and on the 17/18 FloatingDecimal it agrees with Python
-    repr on every pinned input — the per-input F.log==StrictMath pins
-    cover the fixture corpus; on an older deployment JDK re-run those
-    pins before trusting data-dependent 9dp snaps. Pinned
-    kernel-vs-loop (incl. per-input log equality) in
-    tests/test_similarity_lsh.py."""
+    lesson); 9dp snaps replay Spark ROUND via half_up; term sums are
+    exact Decimal; sqrt is IEEE-correctly-rounded everywhere so
+    math.sqrt is safe. JDK assumption (ADVICE r12): Double.toString is
+    shortest-roundtrip on JDK 19+, and on the 17/18 FloatingDecimal it
+    agrees with Python repr on every pinned input — the per-input
+    F.log==StrictMath pin (tests/test_similarity_lsh.py) covers the
+    fixture corpus; on an older deployment JDK re-run it before
+    trusting data-dependent 9dp snaps."""
     import math
-    from decimal import ROUND_HALF_UP, Decimal
+    from decimal import Decimal
 
-    q9 = Decimal("1e-9")
     slog = spark._jvm.java.lang.StrictMath.log
-
-    def r9(x: float) -> Decimal:
-        return Decimal(repr(x)).quantize(q9, ROUND_HALF_UP)
-
     g6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
 
     tab = [(int(r["cell"]), int(r["label"]), int(r["n"])) for r in cells]
@@ -2967,11 +2925,11 @@ def _cpn_from_cells(spark: SparkSession, cells) -> DataFrame:
         nc[c] = nc.get(c, 0) + n
         nl[l] = nl.get(l, 0) + n
         per_cell.setdefault(c, []).append((l, n))
-    mi = sum((r9((n * 1.0 / nn)
-                 * slog(nn * 1.0 * n / (nc[c] * 1.0 * nl[l])))
+    mi = sum((half_up((n * 1.0 / nn)
+                      * slog(nn * 1.0 * n / (nc[c] * 1.0 * nl[l])), 9)
               for c, l, n in tab), Decimal(0))
     ent = lambda counts: sum(  # noqa: E731
-        (r9(-(v * 1.0 / nn) * slog(v * 1.0 / nn))
+        (half_up(-(v * 1.0 / nn) * slog(v * 1.0 / nn), 9)
          for v in counts), Decimal(0))
     hc, hl = ent(nc.values()), ent(nl.values())
     if float(hc) * float(hl) == 0.0:
@@ -3025,14 +2983,12 @@ def cluster_purity_nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
            .localCheckpoint(eager=False))  # k×labels-sized, reused 5x
     # driver resolution (r12): the contingency table is k×labels rows
     # by construction — resolve purity/NMI/majorities on the driver
-    # with exact JVM-log arithmetic (see _cpn_from_cells; pinned
-    # driver-vs-distributed in tests; -1 forces the distributed path).
-    if CPN_COLLECT_MAX >= 0:
-        tab = ncl.limit(CPN_COLLECT_MAX + 1).collect()
-        if len(tab) <= CPN_COLLECT_MAX:
-            out = _cpn_from_cells(spark, tab)
-            if out is not None:
-                return out
+    # with exact JVM-log arithmetic (see _cpn_from_cells).
+    tab = gate.collect_upto(ncl, CPN_COLLECT_MAX)
+    if tab is not None:
+        out = _cpn_from_cells(spark, tab)
+        if out is not None:
+            return out
     nc = ncl.groupBy("cell").agg(F.sum("n").alias("n_c"))
     nl = ncl.groupBy("label").agg(F.sum("n").alias("n_l"))
     tot = ncl.agg(F.sum("n").alias("nn"))

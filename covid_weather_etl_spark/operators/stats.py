@@ -28,7 +28,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import fround_sql
+from covid_weather_etl_spark.functions import gate
+from covid_weather_etl_spark.functions.numeric import fround_sql, half_up
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -453,8 +454,9 @@ ISO_TOK_CUT = 56
 
 #: driver-resolution cap on the binned point frame (rows). Bins are
 #: length-domain-bounded (n_chars // ISO_BIN); the cap also bounds the
-#: driver's (B+1)² float64 segment matrix (4001² ≈ 128 MB/matrix).
-#: -1 forces the distributed triangular-join path (tests).
+#: driver's (B+1)² 8-byte matrices (4001² ≈ 128 MB each). _iso_from_pts
+#: keeps at most two alive at once: tracemalloc measured a 257 MB
+#: (245 MiB) peak on a synthetic 4000-bin input.
 ISO_COLLECT_MAX = 4000
 
 
@@ -467,11 +469,10 @@ def _iso_from_pts(spark: SparkSession, rows) -> DataFrame:
     (Δcpos)·1.0/(Δcw) — int64→float64 conversion then one IEEE divide,
     identical to the engine's long→double cast + divide; the minimax
     is pure comparison/selection (no arithmetic), so min/max pick the
-    identical doubles; finals replay Spark ROUND via Decimal(repr)
-    HALF_UP. Pinned driver-vs-distributed bitwise in
-    tests/test_warehouse.py."""
-    from decimal import ROUND_HALF_UP, Decimal
-
+    identical doubles; finals replay Spark ROUND via half_up. Every
+    step after the first difference runs in place (the divide casts
+    the int64 denominator per element, the same conversion), so at
+    most two (B+1)² matrices are alive at once (see ISO_COLLECT_MAX)."""
     import numpy as np
 
     if not rows:
@@ -485,19 +486,21 @@ def _iso_from_pts(spark: SparkSession, rows) -> DataFrame:
     B = len(pts)
     cw0 = np.concatenate(([0], np.cumsum(ws)))       # pre0 prefix sums
     cp0 = np.concatenate(([0], np.cumsum(pos)))
-    num = (cp0[None, :] - cp0[:, None]).astype(np.float64) * 1.0
-    den = (cw0[None, :] - cw0[:, None]).astype(np.float64)
+    d = cp0[None, :] - cp0[:, None]                  # int64 [lo, hi]
+    A = d.astype(np.float64)                         # (x·1.0 == x)
+    np.subtract(cw0[None, :], cw0[:, None], out=d)
     with np.errstate(divide="ignore", invalid="ignore"):
-        A = num / den                                # A[lo, hi], hi > lo
-    A[np.tril_indices(B + 1)] = np.inf               # hi <= lo: no seg
+        np.divide(A, d, out=A)                       # A[lo, hi], hi > lo
+    del d
+    A[np.tri(B + 1, dtype=bool)] = np.inf            # hi <= lo: no seg
     # S[lo, i] = min_{hi >= i} A[lo, hi]; fit(i) = max_{lo < i} S[lo, i]
-    S = np.minimum.accumulate(A[:, ::-1], axis=1)[:, ::-1]
-    M = np.maximum.accumulate(S, axis=0)
-    fit = M[np.arange(B), np.arange(1, B + 1)]
-    q6 = Decimal("1e-6")
+    rev = A[:, ::-1]
+    np.minimum.accumulate(rev, axis=1, out=rev)
+    np.maximum.accumulate(A, axis=0, out=A)
+    fit = A[np.arange(B), np.arange(1, B + 1)]
 
     def r6(v: float) -> float:
-        return float(Decimal(repr(v)).quantize(q6, ROUND_HALF_UP))
+        return float(half_up(v, 6))
 
     out = [(xs[i], int(ws[i]), int(pos[i]),
             r6(int(pos[i]) * 1.0 / int(ws[i])), r6(float(fit[i])))
@@ -579,12 +582,10 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count("*").alias("w"), F.sum("y").alias("pos"))
            .localCheckpoint(eager=False))  # B rows; reused by 4 joins
     # driver resolution (r13): the bin frame is length-domain-bounded
-    # — resolve the O(B²) minimax on the driver (see _iso_from_pts;
-    # -1 forces the distributed triangular joins).
-    if ISO_COLLECT_MAX >= 0:
-        tab = pts.limit(ISO_COLLECT_MAX + 1).collect()
-        if len(tab) <= ISO_COLLECT_MAX:
-            return _iso_from_pts(spark, tab)
+    # — resolve the O(B²) minimax on the driver (see _iso_from_pts).
+    tab = gate.collect_upto(pts, ISO_COLLECT_MAX)
+    if tab is not None:
+        return _iso_from_pts(spark, tab)
     lo0 = pts.agg((F.min("x") - 1).alias("x"),
                   F.lit(0).cast("long").alias("cw"),
                   F.lit(0).cast("long").alias("cpos"))

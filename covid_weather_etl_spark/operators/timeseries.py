@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import gate
 from covid_weather_etl_spark.functions.numeric import dsum
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -1096,17 +1097,6 @@ def croston_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 HAAR_N = 64
 HAAR_LEVELS = 6
 
-#: single-task collapse gate for the cascade (r12): the post-aggregate
-#: frame is ALWAYS HAAR_N rows by construction (a constant dyadic
-#: window, not a data-sized frame), so the whole 6-level cascade —
-#: previously 6 chained groupBys + 6 energy aggregates + union + total
-#: = 21 scheduled jobs / 85 stages of ≤64-row algebra, pure per-job
-#: scheduler tax (SCALE.md §13) — runs in ONE mapInPandas task. The
-#: flag exists only so tests can force the distributed cascade for the
-#: kernel-vs-loop equality pin; at any data scale the kernel input
-#: stays HAAR_N rows.
-HAAR_SINGLE_TASK_MAX = HAAR_N
-
 
 def _haar_single_task(cur) -> "DataFrame":
     """Whole-cascade-in-one-task kernel over the zero-filled dyadic
@@ -1118,7 +1108,7 @@ def _haar_single_task(cur) -> "DataFrame":
     is accumulated in LEVEL ORDER 1..6 — the same sequential order the
     DuckDB oracle's union CTE sums, which the hash-green history proves
     equals the Spark aggregate's value; energy_share replays the 1e-6
-    grid snap. Pinned kernel-vs-loop in tests/test_timeseries.py."""
+    grid snap."""
     import math
 
     import pandas as pd
@@ -1241,11 +1231,13 @@ def haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = (grid.join(daily, "idx", "left")
            .select("idx", F.coalesce(F.col("rev"), F.lit(0.0))
                    .alias("x")))
-    # single-task collapse (r12): the cascade input is HAAR_N rows by
-    # construction at ANY data scale — run the whole 6-level cascade in
-    # one kernel task (21 jobs → 1; kernel-vs-loop pinned in tests; the
-    # flag only exists so tests can force the distributed cascade).
-    if HAAR_N <= HAAR_SINGLE_TASK_MAX:
+    # single-task collapse (r12): the post-aggregate frame is ALWAYS
+    # HAAR_N rows by construction (a constant dyadic window, not a
+    # data-sized frame) — run the whole 6-level cascade in one kernel
+    # task instead of 6 chained groupBys + 6 energy aggregates + union
+    # + total (21 jobs / 85 stages of ≤64-row algebra, pure per-job
+    # scheduler tax, SCALE.md §13).
+    if gate.fits(HAAR_N, HAAR_N):
         return _haar_single_task(cur)
     out_parts = []
     for lv in range(1, HAAR_LEVELS + 1):

@@ -48,6 +48,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.errors import AnalysisException
 
+from covid_weather_etl_spark.functions import gate
 from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -732,7 +733,7 @@ def dedup_fold_batch(batch_df: DataFrame, batch_id: int,
         labels = None
         contracted = edges
     contracted = contracted.localCheckpoint(eager=True)
-    if contracted.count() <= CC_SINGLE_TASK_MAX:
+    if gate.fits(contracted.count(), CC_SINGLE_TASK_MAX):
         relabel = cc_single_task(contracted)
     else:
         relabel = star_components(contracted, op_name="dedup_fold")

@@ -761,10 +761,9 @@ def test_cc_single_task_equals_star_components(spark):
     (node, lbl) rows — same component minima, same canonical-node
     omission — on a graph with chains, a star, a cycle, singleton
     absence, and out-of-order edge arrival."""
+    from covid_weather_etl_spark.functions.gate import distributed_only
     from covid_weather_etl_spark.operators.corpus import (
         cc_single_task, star_components)
-
-    import covid_weather_etl_spark.operators.corpus as C
 
     edges = [(5, 9), (1, 5), (9, 12),          # chain merged out of order
              (20, 21), (20, 22), (20, 23),     # star
@@ -774,15 +773,11 @@ def test_cc_single_task_equals_star_components(spark):
     a = {(r["node"], r["lbl"])
          for r in cc_single_task(df).collect()}
     # force the distributed contraction (star_components is itself
-    # gated onto cc_single_task since r12 — without the flip this
-    # test would compare the kernel to itself)
-    cap = C.CC_SINGLE_TASK_MAX
-    try:
-        C.CC_SINGLE_TASK_MAX = -1
+    # gated onto cc_single_task since r12 — unforced, this test would
+    # compare the kernel to itself)
+    with distributed_only():
         b = {(r["node"], r["lbl"])
              for r in star_components(df, op_name="test").collect()}
-    finally:
-        C.CC_SINGLE_TASK_MAX = cap
     assert a == b
     assert (12, 1) in a and (23, 20) in a and (32, 30) in a
     # canonical nodes omitted, exactly like star_components
@@ -798,6 +793,7 @@ def test_cc_kernels_agree_on_random_graphs(spark):
     pure-python union-find is the third, independent referee."""
     from hypothesis import given, settings, strategies as st
 
+    from covid_weather_etl_spark.functions.gate import distributed_only
     from covid_weather_etl_spark.operators.corpus import (
         cc_single_task, star_components)
 
@@ -812,15 +808,10 @@ def test_cc_kernels_agree_on_random_graphs(spark):
         df = spark.createDataFrame(edges, "a long, b long")
         got_one = {(r["node"], r["lbl"])
                    for r in cc_single_task(df).collect()}
-        import covid_weather_etl_spark.operators.corpus as C
-        cap = C.CC_SINGLE_TASK_MAX
-        try:
-            C.CC_SINGLE_TASK_MAX = -1  # force the distributed loop
+        with distributed_only():
             got_star = {(r["node"], r["lbl"])
                         for r in star_components(df,
                                                  op_name="prop").collect()}
-        finally:
-            C.CC_SINGLE_TASK_MAX = cap
         parent: dict = {}
 
         def find(x):
@@ -848,7 +839,7 @@ def test_cc_single_task_string_keys_equal_loop(spark):
     contraction's rows — minima compared as UTF-8 bytes, matching the
     engines' binary string order; includes a non-ASCII pair to pin
     the encode/decode roundtrip on the kernel path."""
-    import covid_weather_etl_spark.operators.corpus as C
+    from covid_weather_etl_spark.functions.gate import distributed_only
     from covid_weather_etl_spark.operators.corpus import (
         cc_single_task, star_components)
 
@@ -857,12 +848,8 @@ def test_cc_single_task_string_keys_equal_loop(spark):
              ("é", "Ａ")]             # non-ASCII pair
     df = spark.createDataFrame(edges, "a string, b string")
     got = {(r["node"], r["lbl"]) for r in cc_single_task(df).collect()}
-    cap = C.CC_SINGLE_TASK_MAX
-    try:
-        C.CC_SINGLE_TASK_MAX = -1  # force the distributed loop
+    with distributed_only():
         want = {(r["node"], r["lbl"])
                 for r in star_components(df, op_name="s").collect()}
-    finally:
-        C.CC_SINGLE_TASK_MAX = cap
     assert got == want
     assert ("z", "a") in got and ("m", "a") in got

@@ -4,8 +4,6 @@ engine/oracle pair."""
 
 from __future__ import annotations
 
-import pytest
-
 import numpy as np
 import pandas as pd
 
@@ -123,44 +121,20 @@ def test_average_precision_matches_stepwise_definition(spark):
     assert 0.0 < row.ap <= 1.0
 
 
-def test_weighted_median_literal_path_equals_distributed(spark):
-    """The r12 driver-resolved crossing-band path is BIT-identical to
-    the distributed triangular refinement: force both via the cap."""
+def test_rbo_pow_and_term_snap_match_spark_exhaustive(spark):
+    """The RBO single-task kernel's float replays: (1) its StrictMath
+    pow table matches F.pow bitwise (Spark 4 uses StrictMath; the
+    HotSpot Math.pow intrinsic and C libm differ by 1 ulp at exponent
+    4); (2) its 9dp term snap (numeric.half_up) equals Spark's ROUND
+    over EVERY reachable (o, d) pair — a data-independent exhaustive
+    proof. Kernel vs distributed path: test_oracle_parity's forced
+    rank_biased_overlap case."""
     import struct
-
-    import covid_weather_etl_spark.operators.ranking as R
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = R.WM_COLLECT_MAX
-    try:
-        R.WM_COLLECT_MAX = 100_000
-        lit = rows(R.weighted_median_price(spark, SF_DIR))
-        R.WM_COLLECT_MAX = -1  # force the distributed refinement
-        dist = rows(R.weighted_median_price(spark, SF_DIR))
-    finally:
-        R.WM_COLLECT_MAX = cap
-    assert lit == dist and len(lit) >= 2
-
-
-def test_rbo_kernel_equals_loop_and_term_algebra_exhaustive(spark):
-    """r12 RBO single-task collapse: (1) the kernel's StrictMath pow
-    table matches F.pow bitwise (Spark 4 uses StrictMath; the HotSpot
-    Math.pow intrinsic and C libm differ by 1 ulp at exponent 4);
-    (2) the kernel's 9dp term snap (Decimal(repr(x)) = Double.toString
-    semantics, HALF_UP) equals Spark's ROUND over EVERY reachable
-    (o, d) pair — a data-independent exhaustive proof; (3) kernel ==
-    distributed loop bitwise on the fixture corpus."""
-    import math
-    import struct
-    from decimal import ROUND_HALF_UP, Decimal
 
     from pyspark.sql import functions as F
 
     import covid_weather_etl_spark.operators.ranking as R
+    from covid_weather_etl_spark.functions.numeric import half_up
 
     sm = spark._jvm.java.lang.StrictMath
     powv = [sm.pow(R.RBO_P, float(e)) for e in range(R.RBO_DEPTH)]
@@ -178,47 +152,7 @@ def test_rbo_kernel_equals_loop_and_term_algebra_exhaustive(spark):
                              * F.pow(F.lit(R.RBO_P), F.col("d") - 1)
                              * F.col("o") / F.col("d"), 9)
                      .cast("decimal(25,9)").alias("t")).collect())
-    q9 = Decimal("1e-9")
     for r in sterm:
         raw = (1.0 - R.RBO_P) * powv[r["d"] - 1] * float(r["o"]) \
             / float(r["d"])
-        assert Decimal(repr(raw)).quantize(q9, ROUND_HALF_UP) == r["t"]
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = R.RBO_SINGLE_TASK_MAX
-    try:
-        R.RBO_SINGLE_TASK_MAX = R.RBO_DEPTH
-        single = rows(R.rank_biased_overlap(spark, SF_DIR))
-        R.RBO_SINGLE_TASK_MAX = -1  # force the distributed path
-        loop = rows(R.rank_biased_overlap(spark, SF_DIR))
-    finally:
-        R.RBO_SINGLE_TASK_MAX = cap
-    assert single == loop and len(single) == len(R.RBO_REPORT_DEPTHS)
-
-
-@pytest.mark.slow
-def test_spearman_driver_path_equals_distributed(spark):
-    """r13 driver resolution of the rank/moment algebra is BITWISE
-    identical to the rank_table + moment-aggregate path."""
-    import struct
-
-    import covid_weather_etl_spark.operators.ranking as R
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = R.SPEAR_COLLECT_MAX
-    try:
-        R.SPEAR_COLLECT_MAX = 100_000
-        drv = rows(QUERIES["spearman_correlation"].fn(spark, SF_DIR))
-        R.SPEAR_COLLECT_MAX = -1  # force the distributed path
-        dist = rows(QUERIES["spearman_correlation"].fn(spark, SF_DIR))
-    finally:
-        R.SPEAR_COLLECT_MAX = cap
-    assert drv == dist and len(drv) == 1
+        assert half_up(raw, 9) == r["t"]

@@ -7,8 +7,6 @@ dup-chunk reconstruction, and vocabulary coverage bounds.
 
 from __future__ import annotations
 
-import pytest
-
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -651,28 +649,3 @@ def test_schema_evolution_null_fill_contract(spark):
     assert out[2].n_rows == n_odd
     assert out[2].n_balance_present == n_odd
     assert out[2].n_balance_null == 0
-
-
-@pytest.mark.slow
-def test_isotonic_driver_path_equals_distributed(spark):
-    """r13 driver resolution of the PAV minimax (numpy over the
-    collected bin frame) is BITWISE identical to the triangular-join
-    path (flip the gate)."""
-    import struct
-
-    import covid_weather_etl_spark.operators.stats as ST
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = ST.ISO_COLLECT_MAX
-    try:
-        ST.ISO_COLLECT_MAX = 4000
-        drv = rows(ST.isotonic_calibration(spark, SF_DIR))
-        ST.ISO_COLLECT_MAX = -1  # force the distributed path
-        dist = rows(ST.isotonic_calibration(spark, SF_DIR))
-    finally:
-        ST.ISO_COLLECT_MAX = cap
-    assert drv == dist and len(drv) >= 3
